@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main. Protocol (driver contract): per-query timings go out in
   * one `{"metric":"total",...,"queries":{...}}` line, and the VERY LAST
@@ -112,15 +113,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      LocalSession.envCpus(Runtime.getRuntime.availableProcessors()))
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     // Drive each query by aggregating a hash of EVERY output column — NOT
     // df.count(): under a count() action Catalyst legitimately eliminates
@@ -153,7 +147,7 @@ object Bench {
       val v = try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] substrate $name failed: ${e.getMessage}")
         -1.0
       }
@@ -163,14 +157,14 @@ object Bench {
     // service, parquet footer cache all get primed); failures surface in
     // the measured passes
     queries.foreach { case (_, fn) =>
-      try { run(fn) } catch { case _: Throwable => }
+      try { run(fn) } catch { case NonFatal(_) => }
     }
     def measuredPass(order: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]): Seq[(String, Double)] =
       order.map { case (name, fn) =>
         val t0 = System.nanoTime()
         // a failed query must be visible as -1, not masquerade as a fast pass
         val v = try { run(fn); (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
           }
         name -> v
@@ -219,7 +213,7 @@ object Bench {
     val isolated = contendedNames.map { n =>
       val t0 = System.nanoTime()
       val v = try { run(qByName(n)); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        catch { case NonFatal(_) => -1.0 }
       n -> v
     }.toMap
     val results = slower.map { case (n, v) =>
@@ -261,22 +255,31 @@ object Bench {
     // any stdout mangling by the launcher (sbt prefixes, trailing
     // [success] lines). Written AFTER the protocol lines and best-effort:
     // an unwritable cwd must never void a finished 30s measurement.
-    try {
-      val out = new java.io.File("target/bench_total.json")
-      out.getParentFile.mkdirs()
-      val w = new java.io.PrintWriter(out)
-      try { w.println(fullLine); w.println(totalLine) } finally w.close()
-      // read-back self-check (r17): the r15 artifact lost its per-query
-      // map to a tail-parse format gap and the round lost per-query
-      // comparability (PERF_r16 n_common=0). Assert the file's FIRST
-      // line still round-trips with the queries map present, so a
-      // future format drift dies here instead of voiding a round.
-      val readBack = scala.io.Source.fromFile(out)
-      val firstLine = try readBack.getLines().next() finally readBack.close()
-      validateProtocolLine(firstLine, requireQueries = true)
-    } catch { case e: java.io.IOException =>
-      System.err.println(s"[bench] could not write bench_total.json: ${e.getMessage}")
-    }
-    if (protocolErr.isDefined) sys.exit(2)
+    val out = new java.io.File("target/bench_total.json")
+    val written =
+      try {
+        out.getParentFile.mkdirs()
+        val w = new java.io.PrintWriter(out)
+        try { w.println(fullLine); w.println(totalLine) } finally w.close()
+        true
+      } catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] could not write bench_total.json: ${e.getMessage}")
+        false
+      }
+    // read-back self-check (r17): the r15 artifact lost its per-query
+    // map to a tail-parse format gap and the round lost per-query
+    // comparability (PERF_r16 n_common=0). Assert the file's FIRST line
+    // still round-trips with the queries map present, so a future format
+    // drift fails the run on purpose instead of voiding a round.
+    val readBackErr =
+      if (!written) None
+      else try {
+        val readBack = scala.io.Source.fromFile(out)
+        val firstLine = try readBack.getLines().next() finally readBack.close()
+        validateProtocolLine(firstLine, requireQueries = true); None
+      } catch { case NonFatal(e) => Some(e.getMessage) }
+    readBackErr.foreach(m =>
+      System.err.println(s"[bench] bench_total.json READ-BACK INVALID: $m"))
+    if (protocolErr.isDefined || readBackErr.isDefined) sys.exit(2)
   }
 }

@@ -41,18 +41,11 @@ object CronTick {
       return
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // only stop a session this pass created — embedded callers (tests,
     // notebooks) keep theirs
     val hadSession = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCpus(4))
     import spark.implicits._
 
     val engine = new Engine(spark, workDir)

@@ -186,19 +186,6 @@ object QueriesExt {
       .select(col("doc_id"), col("lang"), col("sc_de"), col("sc_en"),
         col("sc_es"), col("sc_fr"), col("pred"))
 
-  /** Scale-safe global rank / per-zone ntile — public API in
-    * [[graft.ops.Analytics]] since round 7 (a library user wanting a
-    * corpus-wide rank or grouped exact ntile without a single-task sort
-    * reaches them there); these thin wrappers keep the query builders
-    * unchanged. */
-  private def bandedRank(df: DataFrame, key: String, tie: String,
-      asc: Boolean, out: String): DataFrame =
-    Analytics.bandedRank(df, key, tie, asc, out)
-
-  private def zonedNtile(df: DataFrame, zone: String, key: String,
-      ties: Seq[String], k: Int, out: String): DataFrame =
-    Analytics.zonedNtile(df, zone, key, ties, k, out)
-
   /** Value of one md5 hex digit (0-15) — the engine-portable bucket
     * primitive shared by the deterministic sampling/split/budget ops
     * (DuckDB mirror: `strpos('0123456789abcdef', c) - 1`). */
@@ -760,7 +747,7 @@ object QueriesExt {
   /** One unrolled group-grain PageRank iteration (exact integer
     * micro-points, `//` before the multiply — the [[mhGroupDegrees]]
     * recurrence in SQL): sc_g = (m_g−1)·(r_g // d_g) + Σ_{h~g} m_h·(r_h // d_h). */
-  private def qprIterSql(i: Int, edges: String = "qedges"): String = {
+  private def qprIterSql(i: Int, edges: String): String = {
     val prev = s"c${i - 1}"
     s"""x$i AS (SELECT e.src AS gid, sum(c.m * c.c) AS xm
         FROM $edges e JOIN $prev c ON c.gid = e.dst GROUP BY e.src),
@@ -2392,6 +2379,8 @@ object QueriesExt {
       // TRUE by the oracle). The estimate value never feeds the compare.
       (s, d) => {
         val wBuckets = 4096; val dRows = 4
+        // each CMS row slices its own 8 hex chars of one 32-char md5
+        require(dRows * 8 <= 32, "md5 slice rows")
         // three consumers (sketch build, total count, exact top-20) —
         // localCheckpoint the one-column token projection so each reads
         // the materialized blocks instead of re-running the scan +
@@ -3485,12 +3474,13 @@ object QueriesExt {
       // (equal-POPULATION buckets instead of equal-width). Deterministic
       // full-key ordering (n_chars, doc_id) makes both engines cut
       // identical tiles; the rollup is exact integer arithmetic. Since
-      // round 7 the tile rides [[zonedNtile]] (per-language equi-depth
-      // banded rank), so one giant language never serializes into a
+      // round 7 the tile rides [[Analytics.zonedNtile]] (per-language
+      // equi-depth banded rank), so one giant language never serializes into a
       // single window task — the hot-zone escape SCALE.md X33 used to
       // leave as prose; the exact-ntile oracle is unchanged.
       (s, d) => {
-        zonedNtile(docs(s, d).select(col("doc_id"), col("lang"), col("n_chars")),
+        Analytics.zonedNtile(
+          docs(s, d).select(col("doc_id"), col("lang"), col("n_chars")),
           "lang", "n_chars", Seq("doc_id"), 4, "tile")
           .groupBy(col("lang"), col("tile"))
           .agg(count(lit(1)).as("n_docs"),
@@ -4855,7 +4845,7 @@ object QueriesExt {
           .groupBy("user_id").agg(sum("c").as("sc"))
         val nt = sp.agg(count(lit(1)).as("n"), sum("sc").as("tot"))
         def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(19,0)")
-        bandedRank(sp, "sc", "user_id", asc = true, "i")
+        Analytics.bandedRank(sp, "sc", "user_id", asc = true, "i")
           .crossJoin(broadcast(nt))
           .agg(max("n").as("n_users"), max("tot").as("total_cents"),
             sum(dec(col("i")) * dec(col("sc"))).as("t1"),
@@ -5063,7 +5053,7 @@ object QueriesExt {
           .select(col("user_id"), expr("lat_us div 1000000").as("lat_s"))
         val tot = lat.agg(count(lit(1)).as("n_conv"),
           min("lat_s").as("min_s"), max("lat_s").as("max_s"))
-        bandedRank(lat, "lat_s", "user_id", asc = true, "i")
+        Analytics.bandedRank(lat, "lat_s", "user_id", asc = true, "i")
           .crossJoin(broadcast(tot))
           .agg(max("n_conv").as("n_conv"),
             max("min_s").as("min_s"), max("max_s").as("max_s"),
@@ -5433,7 +5423,7 @@ object QueriesExt {
         val nt = docs(s, d).select(col("doc_id"),
           size(split(LlmOps.normText(col("text")), " ")).cast("long").as("n_tok"))
         val tot = nt.agg(count(lit(1)).as("nn"))
-        bandedRank(nt, "n_tok", "doc_id", asc = true, "i")
+        Analytics.bandedRank(nt, "n_tok", "doc_id", asc = true, "i")
           .crossJoin(broadcast(tot))
           .withColumn("idesc", col("nn") + 1 - col("i"))
           .withColumn("pos", (col("idesc") - 1) % 16)
@@ -6003,9 +5993,8 @@ object QueriesExt {
           .hint("shuffle_hash")
           .join(shPack.select(col("doc_id").as("doc_a"), col("p").as("pa"),
             col("n").as("n_a")), Seq("doc_a"))
-          .join(shPack.select(col("doc_id").as("doc_b"), col("p").as("pb"),
-            col("n").as("__n_b")).hint("merge"), Seq("doc_b"))
-          .drop("__n_b")
+          .join(shPack.select(col("doc_id").as("doc_b"), col("p").as("pb"))
+            .hint("merge"), Seq("doc_b"))
           .withColumn("n_inter", graft.functions.native
             .packed_intersect_count(col("pa"), col("pb")).cast("long"))
           // 20-shingle floor and integer C >= 0.5 threshold: both engines
@@ -6196,11 +6185,11 @@ object QueriesExt {
       // 5 − (5·(rank−1)) div n over the GLOBAL rank by (metric, user_id)
       // — the cume-based tile (deterministic, engine-portable; ntile's
       // remainder rule is NOT mirrored, the formula is, on both sides).
-      // Global ranks come from the shared [[bandedRank]] helper (the
-      // gini_spend two-phase shape), one per metric: a band-partitioned
+      // Global ranks come from the shared [[Analytics.bandedRank]] helper
+      // (the gini_spend two-phase shape), one per metric: a band-partitioned
       // row_number + |bands|-row broadcast offsets — never a single-task
       // whole-population sort; bands are each metric's own equi-depth
-      // quantile edges (see [[bandedRank]]).
+      // quantile edges (see [[Analytics.bandedRank]]).
       (s, d) => {
         val u = Tables.events(s, d)
           .select(col("user_id"), to_date(col("ts")).as("day"),

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -18,14 +18,7 @@ object Verify {
         s"unknown query name(s) in filter: ${unknown.mkString(", ")}")
     }
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCpus(4))
     new java.io.File(outDir).mkdirs()
     // A crashed query must be VISIBLE in the round artifact, never an
     // omitted key (round-14 verdict #4: four crashed queries made
@@ -40,7 +33,7 @@ object Verify {
       if (keep(name))
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           val msg = s"${e.getClass.getSimpleName}: ${e.getMessage}"
           System.err.println(s"[verify] $name failed: $msg")
           failures(name) = msg
@@ -69,7 +62,7 @@ object Verify {
             wipe(d)
             Files.createDirectories(d)
             Files.writeString(d.resolve("_ERROR"), s"$name\n$msg\n")
-          } catch { case e2: Throwable =>
+          } catch { case NonFatal(e2) =>
             System.err.println(
               s"[verify] $name: _ERROR marker cleanup failed: ${e2.getMessage}")
           }

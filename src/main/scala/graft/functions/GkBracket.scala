@@ -186,7 +186,7 @@ final class GkSketch(val relativeError: Double) {
     val keepD = scratchD
     var kept = 0
     // the LAST sample is always kept (max guard)
-    var headIdx = sampledCount - 1
+    val headIdx = sampledCount - 1
     keepV(kept) = values(headIdx); keepG(kept) = gs(headIdx); keepD(kept) = deltas(headIdx)
     kept += 1
     var i = sampledCount - 2

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Packed sorted string-set: one compact BINARY blob per set —
   * `[len:int16BE bytes]*` entries in unsigned-byte-lexicographic order —

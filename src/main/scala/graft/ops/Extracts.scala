@@ -256,7 +256,6 @@ object Extracts {
     * compress, small zones (n ≤ 2·accuracy) widen to [min,max]. */
   private def guidedPercentiles(pixels: DataFrame, zone: String,
       value: String, ps: Seq[Double], accuracy: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(ps.nonEmpty, "guidedPercentiles needs at least one fraction")
     // ACCURACY CONTRACT FLOOR (API, not just scaladoc): exactness never
     // depends on accuracy — the widen threshold n ≤ 2·accuracy and the

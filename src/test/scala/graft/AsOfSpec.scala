@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.ops.AsOf
 
 class AsOfSpec extends AnyFunSuite {

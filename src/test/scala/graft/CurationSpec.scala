@@ -149,7 +149,7 @@ class CurationSpec extends AnyFunSuite {
     val out = run("doc_quality_composite")
       .as[(Long, Long, Long, Long, Long)].collect()
     assert(out.length == graft.ops.Tables.documents(spark, d).count())
-    out.foreach { case (id, n, stop, dig, s) =>
+    out.foreach { case (id, n, stop, _, s) =>
       assert(s >= 0L && s <= 1000000L, s"doc $id score $s out of bounds")
       assert(stop <= n)
     }

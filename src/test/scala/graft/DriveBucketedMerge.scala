@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Cache, Extracts, Merge, Tables}
 
@@ -16,12 +15,7 @@ import graft.ops.{Cache, Extracts, Merge, Tables}
 object DriveBucketedMerge {
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val methods = Seq("sum", "mean", "count", "min", "max",
       "weighted_mean", "weighted_sum", "weighted_count")
@@ -40,8 +34,7 @@ object DriveBucketedMerge {
       }
       val t0 = System.nanoTime()
       val wide = Merge.wide(baseC, extracts)
-      wide.select(xxhash64(wide.columns.map(col): _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
+      DriveProfile.benchAction(wide)
       val dt = (System.nanoTime() - t0) / 1e9
       val ex = "Exchange".r.findAllIn(
         wide.queryExecution.executedPlan.toString).length

@@ -44,53 +44,14 @@ object DriveEngine {
     * measured. Byte-golden artifact parity stays pinned at fixture scale
     * by EngineSpec; this tier asserts completion + non-empty results. */
   def x10(): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = LocalSession(LocalSession.envCpus(32))
     val baseDir = "/root/testdata/sf0.1"
     val big = "/tmp/graft_scale10x"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$big/_READY")))
       DriveScale10x.generate(s, baseDir, big)
-    def heapMb(): Long = {
-      System.gc(); Thread.sleep(300); System.gc()
-      val r = Runtime.getRuntime
-      (r.totalMemory - r.freeMemory) / (1024 * 1024)
-    }
-    def cycle(d: String, tag: String): Double = {
-      val e = new Engine(s,
-        java.nio.file.Files.createTempDirectory(s"eng_$tag").toString)
-      e.submit(Request(id = "r-flag", priority = 5, boundary = Boundary("nga"),
-        release_data = Seq(ReleaseSelection("nigeriaaims",
-          filters = Map("donors" -> Seq("AFDB")))),
-        raster_data = Seq(RasterSelection("udel_precip_v401", Seq("mean", "sum"),
-          Seq(RasterFile("udel_precip_v401_1995"))))))
-      val baseF = Tables.nation(s, d)
-        .select(col("n_nationkey").as("asdf_id"), col("n_name"))
-      val locs = Tables.locations(s, d)
-        .withColumn("asdf_id", col("cell_id") % 25)
-        .withColumn("alloc", col("amount") * lit(0.9))
-        .withColumn("donors", lit("AFDB"))
-      val t0 = System.nanoTime()
-      val out = e.tick(baseF, Tables.pixels(s, d), locs)
-      val t = (System.nanoTime() - t0) / 1e9
-      require(out.values.forall(_ == 1), s"tick outcomes not complete: $out")
-      val res = e.results("r-flag").get
-      require(res.count() > 0, "empty flagship result")
-      val t1 = System.nanoTime()
-      e.tick(baseF, Tables.pixels(s, d), locs) // everything cache-hit
-      val tNoop = (System.nanoTime() - t1) / 1e9
-      println(f"$tag%-4s tick=$t%8.2f s  noop_tick=$tNoop%6.2f s" +
-        f"  cols=${res.columns.length}%3d  driver_heap=${heapMb()}%5d MB")
-      t
-    }
-    cycle(baseDir, "warm") // JVM warm-up: a cold first tick pays ~6 s JIT
-    val t1 = cycle(baseDir, "1x")
-    val t10 = cycle(big, "10x")
+    cycle(s, baseDir, "warm") // JVM warm-up: a cold first tick pays ~6 s JIT
+    val t1 = cycle(s, baseDir, "1x")
+    val t10 = cycle(s, big, "10x")
     println(f"lifecycle exponent=${math.log(t10 / t1) / math.log(10.0)}%5.2f")
     s.stop()
   }
@@ -109,14 +70,7 @@ object DriveEngine {
     * so the 100× tick should land within ~2× of 10× per decade of data
     * — i.e. near-linear in the amplified table, flat in driver state. */
   def x100(): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = LocalSession(LocalSession.envCpus(32))
     val baseDir = "/root/testdata/sf0.1"
     val li10 = "/tmp/graft_scale10li"
     val li100 = "/tmp/graft_scale100li"
@@ -124,44 +78,48 @@ object DriveEngine {
       DriveScale10x.generateLineitem(s, baseDir, li10, 10)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$li100/_READY")))
       DriveScale10x.generateLineitem(s, baseDir, li100, 100)
-    def heapMb(): Long = {
-      System.gc(); Thread.sleep(300); System.gc()
-      val r = Runtime.getRuntime
-      (r.totalMemory - r.freeMemory) / (1024 * 1024)
-    }
-    def cycle(d: String, tag: String): Double = {
-      val e = new Engine(s,
-        java.nio.file.Files.createTempDirectory(s"eng_$tag").toString)
-      e.submit(Request(id = "r-flag", priority = 5, boundary = Boundary("nga"),
-        release_data = Seq(ReleaseSelection("nigeriaaims",
-          filters = Map("donors" -> Seq("AFDB")))),
-        raster_data = Seq(RasterSelection("udel_precip_v401", Seq("mean", "sum"),
-          Seq(RasterFile("udel_precip_v401_1995"))))))
-      val baseF = Tables.nation(s, d)
-        .select(col("n_nationkey").as("asdf_id"), col("n_name"))
-      val locs = Tables.locations(s, d)
-        .withColumn("asdf_id", col("cell_id") % 25)
-        .withColumn("alloc", col("amount") * lit(0.9))
-        .withColumn("donors", lit("AFDB"))
-      val t0 = System.nanoTime()
-      val out = e.tick(baseF, Tables.pixels(s, d), locs)
-      val t = (System.nanoTime() - t0) / 1e9
-      require(out.values.forall(_ == 1), s"tick outcomes not complete: $out")
-      val res = e.results("r-flag").get
-      require(res.count() > 0, "empty flagship result")
-      val t1 = System.nanoTime()
-      e.tick(baseF, Tables.pixels(s, d), locs) // everything cache-hit
-      val tNoop = (System.nanoTime() - t1) / 1e9
-      println(f"$tag%-4s tick=$t%8.2f s  noop_tick=$tNoop%6.2f s" +
-        f"  cols=${res.columns.length}%3d  driver_heap=${heapMb()}%5d MB")
-      t
-    }
-    cycle(baseDir, "warm") // JVM warm-up: a cold first tick pays ~6 s JIT
-    val t1 = cycle(baseDir, "1x")
-    val t10 = cycle(li10, "10x")
-    val t100 = cycle(li100, "100x")
+    cycle(s, baseDir, "warm") // JVM warm-up: a cold first tick pays ~6 s JIT
+    val t1 = cycle(s, baseDir, "1x")
+    val t10 = cycle(s, li10, "10x")
+    val t100 = cycle(s, li100, "100x")
     println(f"lifecycle exp[1x->10x]=${math.log(t10 / t1) / math.log(10.0)}%5.2f" +
       f"  exp[10x->100x]=${math.log(t100 / t10) / math.log(10.0)}%5.2f")
     s.stop()
+  }
+
+  private def heapMb(): Long = {
+    System.gc(); Thread.sleep(300); System.gc()
+    val r = Runtime.getRuntime
+    (r.totalMemory - r.freeMemory) / (1024 * 1024)
+  }
+
+  /** One flagship submit → tick → cache-hit re-tick cycle on `d`; prints
+    * the tick times and the driver heap, returns the first tick's wall. */
+  private def cycle(s: org.apache.spark.sql.SparkSession, d: String, tag: String): Double = {
+    val e = new Engine(s,
+      java.nio.file.Files.createTempDirectory(s"eng_$tag").toString)
+    e.submit(Request(id = "r-flag", priority = 5, boundary = Boundary("nga"),
+      release_data = Seq(ReleaseSelection("nigeriaaims",
+        filters = Map("donors" -> Seq("AFDB")))),
+      raster_data = Seq(RasterSelection("udel_precip_v401", Seq("mean", "sum"),
+        Seq(RasterFile("udel_precip_v401_1995"))))))
+    val baseF = Tables.nation(s, d)
+      .select(col("n_nationkey").as("asdf_id"), col("n_name"))
+    val locs = Tables.locations(s, d)
+      .withColumn("asdf_id", col("cell_id") % 25)
+      .withColumn("alloc", col("amount") * lit(0.9))
+      .withColumn("donors", lit("AFDB"))
+    val t0 = System.nanoTime()
+    val out = e.tick(baseF, Tables.pixels(s, d), locs)
+    val t = (System.nanoTime() - t0) / 1e9
+    require(out.values.forall(_ == 1), s"tick outcomes not complete: $out")
+    val res = e.results("r-flag").get
+    require(res.count() > 0, "empty flagship result")
+    val t1 = System.nanoTime()
+    e.tick(baseF, Tables.pixels(s, d), locs) // everything cache-hit
+    val tNoop = (System.nanoTime() - t1) / 1e9
+    println(f"$tag%-4s tick=$t%8.2f s  noop_tick=$tNoop%6.2f s" +
+      f"  cols=${res.columns.length}%3d  driver_heap=${heapMb()}%5d MB")
+    t
   }
 }

@@ -1,35 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{broadcast, col, explode, expr, xxhash64}
+import org.apache.spark.sql.functions.{broadcast, col, explode, expr}
 
-/** Scratch main: run text_quality_lm once with the Spark UI enabled and
-  * dump per-stage wall/row/GC metrics from the status store — the
-  * diagnosis tool for the round-15 decade-3/4 throughput anomaly. */
+/** Scratch main: run text_quality_lm once and dump per-stage run/row/GC
+  * metrics from [[JobStats]] — the diagnosis tool for the round-15
+  * decade-3/4 throughput anomaly. */
 object DriveLmProbe {
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/tmp/graft_scale1000doc"
     val q = if (args.length > 1) args(1) else "text_quality_lm"
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    case class Agg(var run: Long = 0, var gc: Long = 0, var tasks: Int = 0,
-        var in: Long = 0, var shr: Long = 0, var shw: Long = 0, var name: String = "")
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, Agg]()
-    s.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        val a = Agg(m.executorRunTime, m.jvmGCTime, e.stageInfo.numTasks,
-          m.inputMetrics.recordsRead, m.shuffleReadMetrics.recordsRead,
-          m.shuffleWriteMetrics.recordsWritten,
-          e.stageInfo.name.take(70))
-        stages.put(e.stageInfo.stageId, a)
-      }
-    })
+    val s = LocalSession(32, "spark.sql.shuffle.partitions" -> "512")
     if (q == "--shape") {
       // cost decomposition of the score-pass shape: explode | +docAgg |
       // +probe | full — isolates which operator owns the per-trigram µs
@@ -58,17 +38,14 @@ object DriveLmProbe {
         .agg(expr("count(1)")).head())
       s.stop(); return
     }
-    val t0 = System.nanoTime()
-    val df = SparkEntry.queries(q)(s, d)
-    df.select(xxhash64(df.columns.map(col): _*).as("h"))
-      .agg(expr("bit_xor(h)")).head()
-    println(f"wall ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    Thread.sleep(1000)
-    import scala.jdk.CollectionConverters._
-    stages.asScala.toSeq.sortBy(_._1).foreach { case (id, a) =>
-      if (a.run > 2000)
-        println(f"stage $id%3d run=${a.run / 1000.0}%9.1f s gc=${a.gc / 1000.0}%7.1f s" +
-          f" tasks=${a.tasks}%4d in=${a.in}%12d sh_r=${a.shr}%12d sh_w=${a.shw}%12d  ${a.name}")
+    val stats = JobStats.attach(s)
+    val (wall, t) = stats.measure(DriveProfile.seconds(
+      DriveProfile.benchAction(SparkEntry.queries(q)(s, d))))
+    println(f"wall $wall%.1f s")
+    t.stageRows.filter(_.runMs > 2000).foreach { a =>
+      println(f"stage ${a.id}%3d run=${a.runMs / 1000.0}%9.1f s gc=${a.gcMs / 1000.0}%7.1f s" +
+        f" tasks=${a.tasks}%4d in=${a.inputRecords}%12d sh_r=${a.shuffleReadRecords}%12d" +
+        f" sh_w=${a.shuffleWriteRecords}%12d  ${a.name.take(70)}")
     }
     s.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.model._
 
 /** Scale tier for the ORCHESTRATION path (round-12 verdict #4): every
@@ -63,14 +62,7 @@ object DriveQueueScale {
   def main(args: Array[String]): Unit = {
     val machineryTiers =
       if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1000, 10000, 100000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = LocalSession(LocalSession.envCpus(16))
     import s.implicits._
     def base = Seq((1, "A"), (2, "B")).toDF("asdf_id", "name")
     def pixels = Seq((1, 10.0, 1.0, "A", 1998), (2, 6.0, 2.0, "R", 1998))

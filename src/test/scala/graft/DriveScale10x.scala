@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{LlmOps, Tables}
 
@@ -57,19 +57,13 @@ object DriveScale10x {
     // comparable to BASELINE.md/BENCH rows if the parallelism matches.
     // Run with SPARK_DRIVER_MEM=24g — the 10x corpus holds several
     // corpus-sized checkpoints at once during the dedup families.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.envCpus(32)
     // decade-3 partition-sizing experiments: shuffle partitions sized to
     // the DATA (the production rule), overriding the bench default of
     // one-per-core — at 100M+ rows, 32 partitions means multi-million-row
     // sort partitions and the measurement reads spill, not the operator
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
+    val s = LocalSession(cpus, "spark.sql.shuffle.partitions" -> shufP)
     val base = "/root/testdata/sf0.1"
     val big = if (args.nonEmpty) args(0) else "/tmp/graft_scale10x"
     val chosen =
@@ -102,8 +96,7 @@ object DriveScale10x {
       Thread.sleep(2000)
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(s, d)
-      df.select(xxhash64(df.columns.map(col): _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
+      DriveProfile.benchAction(df)
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -164,8 +157,7 @@ object DriveScale10x {
       def runOp1(method: String, d: String): Double = {
         val t0 = System.nanoTime()
         val df = graft.ops.Extracts.extract(Tables.pixels(s, d), method)
-        df.select(xxhash64(df.columns.map(col): _*).as("h"))
-          .agg(expr("bit_xor(h)")).head()
+        DriveProfile.benchAction(df)
         (System.nanoTime() - t0) / 1e9
       }
       // warm + best-of-2 measured: the QuantileSummaries path is
@@ -348,8 +340,7 @@ object DriveScale10x {
               unix_micros(col("ts")).as("us"))
             .repartition(col("user_id"))
             .sortWithinPartitions(col("user_id"), col("us"), col("event_id"))
-          e.select(xxhash64(e.columns.map(col): _*).as("h"))
-            .agg(expr("bit_xor(h)")).head()
+          DriveProfile.benchAction(e)
           (System.nanoTime() - t0) / 1e9
         }
         Seq(ev10, ev100, ev1000).foreach { d =>
@@ -517,19 +508,7 @@ object DriveScale10x {
       val dir = if (args.length > 2) args(2) else "/tmp/graft_scale1000li"
       val op = if (args.length > 3) args(3) else "extract_median"
       val runs = if (args.length > 4) args(4).toInt else 4
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-      val exRun = new java.util.concurrent.atomic.AtomicLong
-      val exGc = new java.util.concurrent.atomic.AtomicLong
-      val spillD = new java.util.concurrent.atomic.AtomicLong
-      val shRead = new java.util.concurrent.atomic.AtomicLong
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          Option(t.taskMetrics).foreach { m =>
-            exRun.addAndGet(m.executorRunTime); exGc.addAndGet(m.jvmGCTime)
-            spillD.addAndGet(m.diskBytesSpilled)
-            shRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          }
-      })
+      val stats = JobStats.attach(s)
       def gcStats(): (Long, Long) = {
         import scala.jdk.CollectionConverters._
         val beans = java.lang.management.ManagementFactory
@@ -538,16 +517,14 @@ object DriveScale10x {
       }
       (1 to runs).foreach { i =>
         val (gc0, gt0) = gcStats()
-        Seq(exRun, exGc, spillD, shRead).foreach(_.set(0L))
-        val t = run(op, dir)
-        Thread.sleep(1000) // listener drain
+        val (t, m) = stats.measure(run(op, dir))
         val (gc1, gt1) = gcStats()
         val heap = (Runtime.getRuntime.totalMemory()
           - Runtime.getRuntime.freeMemory()) >> 20
         println(f"$op run$i wall=$t%7.2f s  driverGC=${gc1 - gc0}%4d/" +
-          f"${(gt1 - gt0) / 1000.0}%6.2f s  taskRun=${exRun.get / 1000.0}%8.1f s" +
-          f"  taskGC=${exGc.get / 1000.0}%7.2f s  spillDisk=${spillD.get >> 20}%6d MB" +
-          f"  shufRead=${shRead.get >> 20}%6d MB  heapUsed=$heap%6d MB")
+          f"${(gt1 - gt0) / 1000.0}%6.2f s  taskRun=${m.taskMs / 1000.0}%8.1f s" +
+          f"  taskGC=${m.gcMs / 1000.0}%7.2f s  spillDisk=${m.spillDiskBytes >> 20}%6d MB" +
+          f"  shufRead=${m.shuffleReadBytes >> 20}%6d MB  heapUsed=$heap%6d MB")
       }
       s.stop(); return
     }
@@ -650,8 +627,7 @@ object DriveScale10x {
         System.gc(); Thread.sleep(2000)
         val t0 = System.nanoTime()
         val df = graft.ops.Extracts.extract(pixels4(copies), method)
-        df.select(xxhash64(df.columns.map(col): _*).as("h"))
-          .agg(expr("bit_xor(h)")).head()
+        DriveProfile.benchAction(df)
         (System.nanoTime() - t0) / 1e9
       }
       val liOps = if (args.length > 2) args.drop(2).toSeq
@@ -719,8 +695,7 @@ object DriveScale10x {
             Window.partitionBy(col("qid"))
               .orderBy(col("cos_r").desc, col("vec_id").asc)))
           .filter(col("rn") <= 5)
-        r.select(xxhash64(r.columns.map(col): _*).as("h"))
-          .agg(expr("bit_xor(h)")).head()
+        DriveProfile.benchAction(r)
         (System.nanoTime() - t0) / 1e9
       }
       def ivf(d: String): Double = {
@@ -728,8 +703,7 @@ object DriveScale10x {
         val (e, q) = embQ(d)
         val (assigned, centroids) = LlmOps.ivfAssign(e)
         val r = LlmOps.ivfSearch(assigned, centroids, q, topK = 5, nprobe = 4)
-        r.select(xxhash64(r.columns.map(col): _*).as("h"))
-          .agg(expr("bit_xor(h)")).head()
+        DriveProfile.benchAction(r)
         (System.nanoTime() - t0) / 1e9
       }
       Seq(("sim_brute_fixedQ", brute _), ("sim_ivf_fixedQ", ivf _))
@@ -1007,8 +981,7 @@ object DriveScale10x {
         val q = e.filter(col("vec_id") % 50 === 0 && col("vec_id") < 10000000L)
           .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
         val r = LlmOps.ivfSearch(assigned, centroids, q, topK = 5, nprobe = 4)
-        r.select(xxhash64(r.columns.map(col): _*).as("h"))
-          .agg(expr("bit_xor(h)")).head()
+        DriveProfile.benchAction(r)
         (System.nanoTime() - t0) / 1e9
       }
       ivfFixedQ(base); val tS = ivfFixedQ(base)

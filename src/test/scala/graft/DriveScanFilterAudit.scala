@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scratch main: flag queries whose parquet scan DataFilters contain
   * higher-order/array-building expressions (the InferFiltersFromGenerate
@@ -7,11 +6,7 @@ import org.apache.spark.sql.SparkSession
 object DriveScanFilterAudit {
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(8)
     val bad = Seq("transform(", "array_distinct(", "aggregate(", "filter(lambda",
       "regexp_extract_all(", "sequence(")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Memory-pressure validation: run the heaviest shuffle/buffer operators
   * under a STARVED memory manager and prove they spill instead of dying,
@@ -149,7 +148,7 @@ object DriveSpill {
   def main(args: Array[String]): Unit = {
     val starved = !args.headOption.contains("--record")
     val chosen = if (args.length > 1) args.drop(1).toSeq else ops
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = LocalSession.envCpus(16)
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Starved mode sizes shuffle partitions to the DATA, not the cores —
     // the production rule (a 1000-executor job runs thousands of shuffle
@@ -159,31 +158,18 @@ object DriveSpill {
     // partition sizing holds. Squeezing 10x data into cores-many
     // partitions breaks that contract for any engine.
     val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      if (starved) "64" else cpus)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      if (starved) "64" else cpus.toString)
     val frac = sys.env.getOrElse("SPARK_GRAFT_MEMFRAC", "0.2")
-    if (starved) b.config("spark.memory.fraction", frac)
-      // under pressure, cached/checkpointed blocks must YIELD to execution
-      // (evict to disk) rather than keep half the pool protected
-      .config("spark.memory.storageFraction", "0.1")
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "ERROR"))
+    val s = LocalSession(cpus, Seq("spark.sql.shuffle.partitions" -> shufP) ++
+      (if (starved) Seq("spark.memory.fraction" -> frac,
+        // under pressure, cached/checkpointed blocks must YIELD to execution
+        // (evict to disk) rather than keep half the pool protected
+        "spark.memory.storageFraction" -> "0.1") else Nil): _*)
     println(s"mode=${if (starved) "starved" else "record"} " +
       s"heap=${Runtime.getRuntime.maxMemory() / (1 << 20)}MB " +
       s"fraction=${s.conf.get("spark.memory.fraction", "default")}")
 
-    val mem = new java.util.concurrent.atomic.AtomicLong
-    val disk = new java.util.concurrent.atomic.AtomicLong
-    s.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        Option(t.taskMetrics).foreach { m =>
-          mem.addAndGet(m.memoryBytesSpilled); disk.addAndGet(m.diskBytesSpilled)
-        }
-    })
+    val stats = JobStats.attach(s)
 
     val ref: Map[String, Long] =
       if (starved) {
@@ -196,10 +182,9 @@ object DriveSpill {
     var failed = List.empty[String]
     val extras = extraOps(s, sf)
     val rows = chosen.map { op =>
-      val h = hashOf(extras.get(op).map(_.apply())
-        .getOrElse(SparkEntry.queries(op)(s, sf)))
-      Thread.sleep(500) // listener events drain async
-      val (m, dk) = (mem.getAndSet(0L), disk.getAndSet(0L))
+      val (h, t) = stats.measure(hashOf(extras.get(op).map(_.apply())
+        .getOrElse(SparkEntry.queries(op)(s, sf))))
+      val (m, dk) = (t.spillMemBytes, t.spillDiskBytes)
       val ok = if (starved) ref.get(op).contains(h) else true
       if (starved && !ok) failed ::= op
       println(f"$op%-22s hash=$h%20d spillMem=${m / (1 << 20)}%6dMB " +

@@ -52,7 +52,6 @@ object DriveStateTable {
   def x100state(deep: Boolean = false): Unit = {
     val s = TestSpark.spark
     s.sparkContext.setLogLevel("ERROR")
-    import s.implicits._
     val delta = 100
     val ticks = 6
     def stateFrame(from: Long, until: Long) =

@@ -146,12 +146,7 @@ object DriveStreamScale {
     *    full corpus, row for row.
     */
   def x100stream(rocksdb: Boolean = false): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "4000")
-      .config("spark.ui.enabled", "false")
+    val progress = "spark.sql.streaming.numRecentProgressUpdates" -> "4000"
     // --rocksdb (round-11 verdict #6): the 100 TB posture runs the
     // RocksDB state store, not the default in-memory HDFS-backed one —
     // same drive, same corpora, same hard requires (restart survival,
@@ -159,12 +154,11 @@ object DriveStreamScale {
     // numRowsTotal is an estimate (estimate-num-keys), so the printed
     // exponent may wobble where the HDFS store's is exact; the equality
     // requires are the gate.
-    if (rocksdb) builder.config(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
+    val rocks = "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val spark = LocalSession(LocalSession.envCpus(16),
+      (if (rocksdb) Seq(progress, rocks) else Seq(progress)): _*)
     if (rocksdb) println("[x100stream] state store provider = RocksDB")
-    spark.sparkContext.setLogLevel("ERROR")
     val (perSlice, nUsers) = (20000, 5000)
     // fixed paths + _READY markers: the 1,110-slice generation is ~10 min
     // of sequential single-file writes, reused across drive invocations
@@ -303,16 +297,11 @@ object DriveStreamScale {
     if (args.nonEmpty && args(0) == "--x100stream") {
       x100stream(rocksdb = args.contains("--rocksdb")); return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the 10x run produces >100 progress updates (100 data batches plus
-      // watermark/timer batches); the default 100-entry retention would
-      // silently truncate the max-state window to a suffix of the run
-      .config("spark.sql.streaming.numRecentProgressUpdates", "1000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the 10x run produces >100 progress updates (100 data batches plus
+    // watermark/timer batches); the default 100-entry retention would
+    // silently truncate the max-state window to a suffix of the run
+    val spark = LocalSession(LocalSession.envCpus(16),
+      "spark.sql.streaming.numRecentProgressUpdates" -> "1000")
     import spark.implicits._
     val dim = (0L until 5000L).map(k => (k, s"seg_${k % 17}")).toDF("k", "seg")
 

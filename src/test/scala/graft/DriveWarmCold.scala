@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, xxhash64}
-import org.apache.spark.sql.functions.expr
-
 /** Scratch main: run one query K times in a single JVM and decompose
   * each pass — wall, summed task run/GC time, shuffle bytes, memory and
   * disk SPILL, and the scratch-disk free-space delta — the instrumented
@@ -18,27 +14,9 @@ object DriveWarmCold {
     val q = if (args.length > 1) args(1) else "dedup_lines"
     val k = if (args.length > 2) args(2).toInt else 3
     val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "512")
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    case class Agg(run: Long, gc: Long, tasks: Int, in: Long, shr: Long,
-        shw: Long, spillM: Long, spillD: Long, name: String)
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, Agg]()
-    s.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        stages.put(e.stageInfo.stageId, Agg(m.executorRunTime, m.jvmGCTime,
-          e.stageInfo.numTasks, m.inputMetrics.recordsRead,
-          m.shuffleReadMetrics.recordsRead, m.shuffleWriteMetrics.recordsWritten,
-          m.memoryBytesSpilled, m.diskBytesSpilled, e.stageInfo.name.take(60)))
-      }
-    })
+    val s = LocalSession(32, "spark.sql.shuffle.partitions" -> shufP)
+    val stats = JobStats.attach(s)
     val tmp = new java.io.File("/tmp")
-    import scala.jdk.CollectionConverters._
     (1 to k).foreach { pass =>
       if (pass > 1) {
         // Reclaim the previous pass's shuffle/spill files BEFORE timing
@@ -50,28 +28,18 @@ object DriveWarmCold {
         System.gc()
         Thread.sleep(3000)
       }
-      stages.clear()
       val freeBefore = tmp.getUsableSpace
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(q)(s, d)
-      df.select(xxhash64(df.columns.map(col): _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // let stage-completed events drain
-      val rows = stages.asScala.toSeq.sortBy(_._1)
-      val run = rows.map(_._2.run).sum / 1000.0
-      val gc = rows.map(_._2.gc).sum / 1000.0
-      val spM = rows.map(_._2.spillM).sum / 1e9
-      val spD = rows.map(_._2.spillD).sum / 1e9
+      val (wall, t) = stats.measure(DriveProfile.seconds(
+        DriveProfile.benchAction(SparkEntry.queries(q)(s, d))))
       val freeAfter = tmp.getUsableSpace
-      println(f"pass $pass wall=$wall%7.1f s taskRun=$run%8.1f s gc=$gc%7.1f s" +
-        f" spillMem=$spM%6.2f GB spillDisk=$spD%6.2f GB" +
+      println(f"pass $pass wall=$wall%7.1f s taskRun=${t.taskMs / 1000.0}%8.1f s" +
+        f" gc=${t.gcMs / 1000.0}%7.1f s spillMem=${t.spillMemBytes / 1e9}%6.2f GB" +
+        f" spillDisk=${t.spillDiskBytes / 1e9}%6.2f GB" +
         f" tmpFreeDelta=${(freeAfter - freeBefore) / 1e9}%+7.2f GB")
-      rows.foreach { case (id, a) =>
-        if (a.run > 5000)
-          println(f"  stage $id%4d run=${a.run / 1000.0}%8.1f s gc=${a.gc / 1000.0}%6.1f s" +
-            f" tasks=${a.tasks}%4d in=${a.in}%12d sh_r=${a.shr}%12d" +
-            f" sh_w=${a.shw}%12d spD=${a.spillD / 1e9}%5.1f GB  ${a.name}")
+      t.stageRows.filter(_.runMs > 5000).foreach { a =>
+        println(f"  stage ${a.id}%4d run=${a.runMs / 1000.0}%8.1f s gc=${a.gcMs / 1000.0}%6.1f s" +
+          f" tasks=${a.tasks}%4d in=${a.inputRecords}%12d sh_r=${a.shuffleReadRecords}%12d" +
+          f" sh_w=${a.shuffleWriteRecords}%12d spD=${a.spillDiskBytes / 1e9}%5.1f GB  ${a.name.take(60)}")
       }
     }
     s.stop()

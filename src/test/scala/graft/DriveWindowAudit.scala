@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
@@ -95,12 +94,7 @@ object DriveWindowAudit {
 
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = LocalSession(4)
     var flagged = 0
     var globalSites = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
-import graft.plans.GraftExtensions
 
 /** The spark.sql.extensions entry point: native functions resolvable by
   * name from plain SQL, optimizer rule injected. */

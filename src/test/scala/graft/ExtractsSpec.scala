@@ -110,7 +110,7 @@ class ExtractsSpec extends AnyFunSuite {
         assert(math.abs(guided(zn) - ev) < 1e-9,
           s"p=$p zone $zn: guided ${guided(zn)} vs exact $ev")
     }
-    for (trial <- 0 until 5) {
+    for (_ <- 0 until 5) {
       // 1200 rows over ~3 fat zones: at the floor accuracy the widen
       // threshold is n ≤ 200, so the fat zones (~350-400 rows) exercise
       // the NARROW-window path while zone 3 / the n=1 zone keep the
@@ -200,7 +200,7 @@ class ExtractsSpec extends AnyFunSuite {
       count => scount, min => smin, max => smax, lit => slit,
       monotonically_increasing_id}
     val rnd = new scala.util.Random(23)
-    for (trial <- 0 until 3) {
+    for (_ <- 0 until 3) {
       // 3000 rows over ~3 fat zones: at the floor accuracy the k=10 widen
       // threshold is n ≤ 650, so the fat zones run the NARROW boundary
       // windows while zone 3 / the n=1 zone keep the widen path covered
@@ -246,23 +246,18 @@ class ExtractsSpec extends AnyFunSuite {
     // Ckpt.planOnly, because under AQE even a LAZY localCheckpoint
     // materializes every upstream stage at construction time (measured:
     // 18 jobs just building the guided mad frame without the guard).
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
+    val stats = JobStats.attach(spark)
     try {
-      graft.ops.Ckpt.planOnly {
-        Extracts.extract(px, "mad")        // guided (registered) form
-        Extracts.extract(px, "mad_buffer") // buffering parity baseline
-        Extracts.guidedTileBounds(px, 4)   // histogram builder (same
-        // checkpoint helpers — must stay job-free under planOnly too)
+      val (_, t) = stats.measure {
+        graft.ops.Ckpt.planOnly {
+          Extracts.extract(px, "mad")        // guided (registered) form
+          Extracts.extract(px, "mad_buffer") // buffering parity baseline
+          Extracts.guidedTileBounds(px, 4)   // histogram builder (same
+          // checkpoint helpers — must stay job-free under planOnly too)
+        }
       }
-      Thread.sleep(500) // listener events drain async
-      assert(jobs.get() == 0,
-        s"mad construction ran ${jobs.get()} job(s); dry-run would scan")
-    } finally spark.sparkContext.removeSparkListener(l)
+      assert(t.jobs == 0,
+        s"mad construction ran ${t.jobs} job(s); dry-run would scan")
+    } finally stats.detach()
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.model._
 import graft.ops.Cache
 

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.{col, row_number, sum}
-import graft.ops.Tables
 
 /** Physical-plan regression tests — the 100 TB posture (SURVEY.md §4):
   * dimension joins must broadcast, predicates and projections must reach the

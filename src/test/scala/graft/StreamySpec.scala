@@ -128,7 +128,6 @@ class StreamySpec extends AnyFunSuite {
   }
 
   test("sessionFlush: sessions span REAL micro-batches; watermark timeout flushes idle users (T8)") {
-    import org.apache.spark.sql.functions._
     def ev(id: Long, u: Long, t: String, v: Double) =
       (id, u, "view", java.sql.Timestamp.valueOf(t), v)
     // batch 1: u7 opens a session; u9 has a lone event (will time out).
@@ -176,7 +175,6 @@ class StreamySpec extends AnyFunSuite {
   }
 
   test("sessionFlush: late-but-admissible event merges conservatively, never inverts (T8)") {
-    import org.apache.spark.sql.functions._
     def ev(id: Long, u: Long, t: String, v: Double) =
       (id, u, "view", java.sql.Timestamp.valueOf(t), v)
     // batch 1: u7 at 10:00 -> watermark 09:30. batch 2: u7 at 09:50 —
@@ -212,7 +210,6 @@ class StreamySpec extends AnyFunSuite {
   }
 
   test("enrich: stream-static broadcast join on a REAL stream matches batch (T9)") {
-    import org.apache.spark.sql.functions._
     val dim = Seq((7L, "ALPHA"), (8L, "BETA")).toDF("k", "zone")
     val evs = Seq(
       (1L, 7L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),

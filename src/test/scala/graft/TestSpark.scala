@@ -5,11 +5,5 @@ import org.apache.spark.sql.SparkSession
 /** Shared local session for all suites (forked test JVM exits at the end —
   * no explicit stop, so suites can't kill each other's session). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4, "spark.app.name" -> "graft-test")
 }
